@@ -27,6 +27,7 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from laji_pygeoapi_spark import cache
 from laji_pygeoapi_spark.functions import expressions as E
 from laji_pygeoapi_spark.operators import dedup as DD
 from laji_pygeoapi_spark.operators import maintenance as MT
@@ -202,7 +203,7 @@ def q_knn_join(spark, sf_dir):
     Oracle: the full cross-join window rank in DuckDB."""
     # one persisted point projection feeds lefts, the candidate side and
     # the fallback side (4 scans -> 1)
-    pts = _points(spark, sf_dir).select("doc_id", "lon", "lat").persist()
+    pts = cache.persist(_points(spark, sf_dir).select("doc_id", "lon", "lat"))
     lefts = (pts.filter(F.col("doc_id") % 10 == 0)
                 .withColumnRenamed("doc_id", "query_id"))
     # fully auto-sized (density-derived res + ring, round-4 verdict #3):
@@ -216,9 +217,7 @@ def q_knn_join(spark, sf_dir):
                             k=3, res=None, ring=None,
                             left_id="query_id", right_id="pid",
                             exclude_self=True)
-    res = out.select("query_id", F.col("pid").alias("doc_id"), "rank")
-    res._cached_deps = getattr(out, "_cached_deps", []) + [pts]
-    return res
+    return out.select("query_id", F.col("pid").alias("doc_id"), "rank")
 
 
 TRIANGLE = ((21.0, 59.6), (29.0, 59.6), (25.0, 63.5))
@@ -473,14 +472,12 @@ def q_embedding_neardup(spark, sf_dir):
     # persist the planted projection: embedding_neardup reads its input
     # FOUR times (dim probe, bucket projection, both cosine re-attach
     # sides) and each read re-ran the planted self-join (round-6)
-    derived = TX.spread_small_input(
-        _planted_embeddings(spark, sf_dir)).persist()
+    derived = cache.persist(TX.spread_small_input(
+        _planted_embeddings(spark, sf_dir)))
     out = DD.embedding_neardup(derived, threshold=0.95, tables=2, planes=8,
                                dim=64)  # contract-pinned: the oracle bakes
     # 64-dim hyperplane literals, so the dim probe job is redundant
-    out = out.select("id_a", "id_b")
-    out._cached_deps = [derived]
-    return out
+    return out.select("id_a", "id_b")
 
 
 def q_semantic_dedup(spark, sf_dir):
@@ -496,16 +493,14 @@ def q_semantic_dedup(spark, sf_dir):
     cosine verify + recursive-CTE components)."""
     # persisted for the same reason as q_embedding_neardup, plus the CC
     # vertex side reads it once more (round-6)
-    derived = TX.spread_small_input(
-        _planted_embeddings(spark, sf_dir)).persist()
+    derived = cache.persist(TX.spread_small_input(
+        _planted_embeddings(spark, sf_dir)))
     pairs = DD.embedding_neardup(derived, threshold=0.95, tables=2, planes=8,
                                  dim=64)  # see q_embedding_neardup
     cc = DD.connected_components(pairs, vertices=derived.select("vec_id"))
-    out = cc.select(F.col("id").alias("vec_id"),
-                    F.col("comp").alias("rep_id"),
-                    (F.col("id") == F.col("comp")).cast("long").alias("kept"))
-    out._cached_deps = getattr(cc, "_cached_deps", []) + [derived]
-    return out
+    return cc.select(F.col("id").alias("vec_id"),
+                     F.col("comp").alias("rep_id"),
+                     (F.col("id") == F.col("comp")).cast("long").alias("kept"))
 
 
 def q_exact_dedup(spark, sf_dir):
@@ -960,13 +955,8 @@ def q_dedup_clusters(spark, sf_dir):
     docs = _tbl(spark, sf_dir, "documents")
     pairs = DD.minhash_pairs_verified(docs, num_perm=64, bands=16, threshold=0.7)
     cc = DD.connected_components(pairs)
-    out = cc.select(F.col("id").alias("doc_id"),
-                    F.col("comp").alias("component"))
-    # carry the minhash stage's cache handle AND the CC loop's final
-    # checkpoint so bench/pipeline callers can release both
-    out._cached_deps = (getattr(pairs, "_cached_deps", [])
-                        + getattr(cc, "_cached_deps", []))
-    return out
+    return cc.select(F.col("id").alias("doc_id"),
+                     F.col("comp").alias("component"))
 
 
 def q_multimodal_curation(spark, sf_dir):

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .. import cache
 from . import text as TX
 
 # ------------------------------------------------------------------ exact
@@ -271,12 +272,13 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     sig = minhash_signature_udf(num_perm, shingle_n=shingle_n)
     # tokens staged into their own projection (lambda re-evaluation trap)
     if toks is None:
-        toks = (_spread_small_input(df.select(id_col, text_col))
-                .select(F.col(id_col).alias("id"),
-                        TX.tokenize_udf()(F.col(text_col)).alias("_toks"))
-                .localCheckpoint())  # barrier: the size filter below must
-        # not be substituted through the UDF projection (second
-        # ArrowEvalPython); hot callers pass persisted toks anyway
+        # checkpoint barrier: the size filter below must not be substituted
+        # through the UDF projection (second ArrowEvalPython); hot callers
+        # pass persisted toks anyway
+        toks = cache.checkpoint(
+            _spread_small_input(df.select(id_col, text_col))
+            .select(F.col(id_col).alias("id"),
+                    TX.tokenize_udf()(F.col(text_col)).alias("_toks")))
     hashed = (toks.filter(F.size("_toks") > 0)  # token-less docs can't near-dup
                   .select("id", F.transform("_toks", lambda t: F.xxhash64(t)).alias("_th")))
     # no isNotNull filter on sig: the size(_toks) > 0 prefilter already
@@ -332,20 +334,20 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
 
     The candidate PAIR set is persisted here (it is tiny by LSH
     construction and is read three times: both join sides and the
-    candidate-id prefilter) and registered on the result as
-    ``_cached_deps``.  The shingle projection is computed ONLY for
-    candidate ids (one semi-join against the pair endpoints): without the
-    prefilter the join evaluated the shingle transform over the ENTIRE
-    corpus on BOTH sides to serve a candidate set thousands of times
-    smaller (round-6; the broadcast pair join does not prune the probe
-    side's projections)."""
+    candidate-id prefilter) and registered with the cache scope (release
+    with ``plans.curation.release_caches``).  The shingle projection is
+    computed ONLY for candidate ids (one semi-join against the pair
+    endpoints): without the prefilter the join evaluated the shingle
+    transform over the ENTIRE corpus on BOTH sides to serve a candidate
+    set thousands of times smaller (round-6; the broadcast pair join does
+    not prune the probe side's projections)."""
     if toks is None:
         toks = (_spread_small_input(df.select(id_col, text_col))
                 .select(F.col(id_col).alias("_jid"),
                         TX.tokenize_udf()(F.col(text_col)).alias("_toks")))
     else:
         toks = toks.select(F.col("id").alias("_jid"), "_toks")
-    pairs = pairs.persist()
+    pairs = cache.persist(pairs)
     cand_ids = (pairs.select(F.col("id_a").alias("_jid"))
                      .unionByName(pairs.select(F.col("id_b").alias("_jid")))
                      .distinct())
@@ -360,10 +362,8 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
               .withColumn("uni", F.size(F.array_union("sh_a", "sh_b")))
               .withColumn("jaccard", F.when(F.col("uni") > 0, F.col("inter") / F.col("uni"))
                                       .otherwise(F.lit(0.0))))
-    out = (j.filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
-    out._cached_deps = [pairs]
-    return out
+    return (j.filter(F.col("jaccard") >= threshold)
+             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
 
 
 def minhash_pairs_verified(df: DataFrame, text_col: str = "text",
@@ -376,20 +376,18 @@ def minhash_pairs_verified(df: DataFrame, text_col: str = "text",
     join read the cached blocks instead of re-scanning + re-tokenizing the
     corpus — one scan and one tokenize pass replace three.
 
-    The cache is registered on the result as ``_cached_deps`` — call
+    The cache is registered with the cache scope — call
     ``plans.curation.release_caches(result)`` after materializing to free
     the blocks deterministically (round-3 ADVICE: un-released persists
     leak until LRU eviction and skew back-to-back benches)."""
-    toks = (_spread_small_input(df.select(id_col, text_col))
-            .select(F.col(id_col).alias("id"),
-                    TX.tokenize_udf()(F.col(text_col)).alias("_toks"))
-            .persist())
+    toks = cache.persist(
+        _spread_small_input(df.select(id_col, text_col))
+        .select(F.col(id_col).alias("id"),
+                TX.tokenize_udf()(F.col(text_col)).alias("_toks")))
     pairs = minhash_lsh_candidates(df, text_col, id_col, num_perm, bands,
                                    shingle_n, toks=toks)
-    out = jaccard_verify(df, pairs, text_col, id_col, shingle_n, threshold,
-                         toks=toks)
-    out._cached_deps = [toks] + getattr(out, "_cached_deps", [])
-    return out
+    return jaccard_verify(df, pairs, text_col, id_col, shingle_n, threshold,
+                          toks=toks)
 
 
 def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -839,19 +837,15 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
     # chain inside the sizing count (round-6 follow-up; measured 4.9 s ->
     # ~2.5 s at the 10x corpus).  explode(array(struct fwd, struct rev))
     # yields exactly the same row set from a single evaluation.
-    und0 = (edges.select(F.explode(F.array(
-                F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-                F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))))
+    und0 = cache.persist(
+        edges.select(F.explode(F.array(
+            F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+            F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))))
             .alias("_e"))
-            .select("_e.src", "_e.dst").distinct())
-    und0 = und0.persist()
-    try:
-        n_edges = und0.count()  # materializes the persist; sizes everything
-        if n_edges <= 2 * small_graph_max_edges:
-            return _cc_small_graph(und0, vertices)
-    except Exception:
-        und0.unpersist()
-        raise
+        .select("_e.src", "_e.dst").distinct())
+    n_edges = und0.count()  # materializes the persist; sizes everything
+    if n_edges <= 2 * small_graph_max_edges:
+        return _cc_small_graph(und0, vertices)
     verts = und0.select(F.col("src").alias("id")).distinct()
     if vertices is not None:
         vcol = vertices.columns[0]
@@ -873,78 +867,64 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
     # explicit repartition below the union is each plain round's only one.
     iter_parts = max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions")),
                             (2 * n_edges) // 100_000 + 1))
-    # checkpoint construction INSIDE the try (round-5 ADVICE): a failure
-    # while materializing und/labels must not leak their blocks (or
-    # und0's) into the shared session
-    und = None
-    ckpts: list = []
-    try:
-        und = und0.repartition(iter_parts, "src").localCheckpoint()
-        und0.unpersist()
-        labels = (verts.repartition(iter_parts, "id")
-                       .select("id", F.col("id").alias("comp"))
-                       .localCheckpoint())
-        ckpts = [labels]  # superseded ckpts released as the loop advances
-        for rounds in range(1, max_iter + 1):
-            nbr = (und.join(labels, und["src"] == labels["id"])
-                      .select(F.col("dst").alias("id"), "comp",
-                              F.lit(None).cast("long").alias("_old")))
-            # the old label rides through the aggregation (labels has one
-            # row per id, so min(_old) recovers it exactly): convergence
-            # detection becomes a FILTER on the round's own output instead
-            # of an old-vs-new join — one fewer shuffle join per round
-            mins = (labels.select("id", "comp", F.col("comp").alias("_old"))
-                    .unionByName(nbr)
-                    .repartition(iter_parts, "id")
-                    .groupBy("id").agg(F.min("comp").alias("comp"),
-                                       F.min("_old").alias("_old")))
-            if rounds > jump_after:
-                # pointer jump: comp <- comp's comp (left join: every comp
-                # IS a vertex id, but stay null-safe under schema drift).
-                # The parent side arrives hash(id)=hash(_pid) partitioned;
-                # only the comp-keyed left side needs an exchange, sized
-                # explicitly like every other shuffle in the loop.
-                parent = mins.select(F.col("id").alias("_pid"),
-                                     F.col("comp").alias("_pcomp"))
-                mins = (mins.repartition(iter_parts, "comp")
-                            .join(parent, F.col("comp") == parent["_pid"], "left")
-                            .select("id",
-                                    F.coalesce("_pcomp", "comp").alias("comp"),
-                                    "_old")
-                            .repartition(iter_parts, "id"))
-            # lazy checkpoint: the convergence count below is the action
-            # that materializes it — one Spark job per round, not two
-            new = mins.localCheckpoint(eager=False)
-            changed = new.filter(F.col("comp") < F.col("_old")).count()
-            labels = new.select("id", "comp")
-            ckpts.append(new)
-            # the count above materialized `new`; its predecessor (and the
-            # first round's `und` dependency) are no longer readable from
-            # the result — release instead of leaking checkpoint blocks
-            # across the 62-query shared session (round-5 review)
-            ckpts.pop(0).unpersist()
-            if changed == 0:
-                labels._cc_rounds = rounds
-                break
-        else:
-            # silent non-convergence would return WRONG components for a
-            # graph deeper than max_iter (min-label moves one hop/round) —
-            # correctness first: refuse, tell the caller to raise the cap
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                "rounds (component diameter exceeds max_iter); raise it")
-        und.unpersist()
-        # the final checkpoint backs the returned frame: hand its release
-        # to the caller via the repo's deterministic-release convention
-        labels._cached_deps = list(ckpts)
-        return labels
-    except Exception:
-        und0.unpersist()
-        if und is not None:
-            und.unpersist()
-        for c in ckpts:
-            c.unpersist()
-        raise
+    # every persist/checkpoint below is registered with the cache scope, so
+    # a failure mid-loop leaves nothing the caller's release does not free
+    und = cache.checkpoint(und0.repartition(iter_parts, "src"))
+    labels = cache.checkpoint(verts.repartition(iter_parts, "id")
+                                   .select("id", F.col("id").alias("comp")))
+    cache.unpersist(und0)  # read by both checkpoints above, never again
+    prev = labels
+    for rounds in range(1, max_iter + 1):
+        nbr = (und.join(labels, und["src"] == labels["id"])
+                  .select(F.col("dst").alias("id"), "comp",
+                          F.lit(None).cast("long").alias("_old")))
+        # the old label rides through the aggregation (labels has one
+        # row per id, so min(_old) recovers it exactly): convergence
+        # detection becomes a FILTER on the round's own output instead
+        # of an old-vs-new join — one fewer shuffle join per round
+        mins = (labels.select("id", "comp", F.col("comp").alias("_old"))
+                .unionByName(nbr)
+                .repartition(iter_parts, "id")
+                .groupBy("id").agg(F.min("comp").alias("comp"),
+                                   F.min("_old").alias("_old")))
+        if rounds > jump_after:
+            # pointer jump: comp <- comp's comp (left join: every comp
+            # IS a vertex id, but stay null-safe under schema drift).
+            # The parent side arrives hash(id)=hash(_pid) partitioned;
+            # only the comp-keyed left side needs an exchange, sized
+            # explicitly like every other shuffle in the loop.
+            parent = mins.select(F.col("id").alias("_pid"),
+                                 F.col("comp").alias("_pcomp"))
+            mins = (mins.repartition(iter_parts, "comp")
+                        .join(parent, F.col("comp") == parent["_pid"], "left")
+                        .select("id",
+                                F.coalesce("_pcomp", "comp").alias("comp"),
+                                "_old")
+                        .repartition(iter_parts, "id"))
+        # lazy checkpoint: the convergence count below is the action that
+        # materializes it — one Spark job per round, not two
+        new = cache.checkpoint(mins, eager=False)
+        changed = new.filter(F.col("comp") < F.col("_old")).count()
+        labels = new.select("id", "comp")
+        # the count above materialized `new`; its predecessor is no longer
+        # readable from the result — release it now rather than holding
+        # every round until the caller's release (round-5 review)
+        cache.unpersist(prev)
+        prev = new
+        if changed == 0:
+            labels._cc_rounds = rounds
+            break
+    else:
+        # silent non-convergence would return WRONG components for a graph
+        # deeper than max_iter (min-label moves one hop/round) —
+        # correctness first: refuse, tell the caller to raise the cap
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} "
+            "rounds (component diameter exceeds max_iter); raise it")
+    cache.unpersist(und)
+    # the final round's checkpoint backs the result: the caller's release
+    # frees it
+    return labels
 
 
 def _cc_small_graph(und0: DataFrame, vertices: DataFrame | None) -> DataFrame:
@@ -953,7 +933,7 @@ def _cc_small_graph(und0: DataFrame, vertices: DataFrame | None) -> DataFrame:
     distributively.  ``und0`` is released here."""
     spark = und0.sparkSession
     pdf = und0.toPandas()  # Arrow path; bounded by small_graph_max_edges
-    und0.unpersist()
+    cache.unpersist(und0)
     parent: dict = {}
 
     def find(x):
@@ -989,7 +969,6 @@ def _cc_small_graph(und0: DataFrame, vertices: DataFrame | None) -> DataFrame:
                         .select("id", F.col("id").alias("comp")))
         labels = labels.unionByName(singles)
     labels._cc_rounds = 0
-    labels._cached_deps = []
     return labels
 
 
@@ -1035,7 +1014,8 @@ def connected_components_incremental(old_labels: DataFrame,
     touched = touched.distinct()
     affected_comps = (old_labels.join(touched, "id", "left_semi")
                                 .select("comp").distinct())
-    affected = old_labels.join(affected_comps, "comp", "left_semi").persist()
+    affected = cache.persist(
+        old_labels.join(affected_comps, "comp", "left_semi"))
     star = (affected.filter(F.col("id") != F.col("comp"))
                     .select(F.col("id").alias("id_a"),
                             F.col("comp").alias("id_b")))
@@ -1043,38 +1023,5 @@ def connected_components_incremental(old_labels: DataFrame,
     sub = connected_components(delta.unionByName(star),
                                vertices=verts, max_iter=max_iter)
     untouched = old_labels.join(affected_comps, "comp", "left_anti")
-    out = untouched.unionByName(sub.select("id", "comp"))
-    out._cached_deps = [affected] + getattr(sub, "_cached_deps", [])
-    return out
+    return untouched.unionByName(sub.select("id", "comp"))
 
-
-def ngram_overlap_split(df: DataFrame, bench_pred, n: int = 8,
-                        text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """:func:`ngram_overlap` for a benchmark that is a PREDICATE over the
-    same corpus (holdout split): the n-gram projection is computed and
-    cached ONCE and both sides filter it.
-
-    SCOPE (round-5 A/B, BENCH.md): only worth it when the gram projection
-    feeds MULTIPLE consumers — for the single decontamination pass the
-    persist loses ~10-15% at toy scale (it materializes 100% of exploded
-    grams to save re-tokenizing the small bench side) and is a memory
-    non-starter at corpus scale; prefer :func:`ngram_overlap` there."""
-    from . import text as TXO
-    staged = (df.select(id_col, text_col)
-                .withColumn("_toks", TXO.tokenize(F.col(text_col)))
-                .withColumn("_is_bench", bench_pred))
-    g = F.array_distinct(TXO.shingles_from_tokens(F.col("_toks"), n))
-    # persisted; handle registered on the result (_cached_deps) so callers
-    # can release deterministically via plans.curation.release_caches
-    grams = (staged.select(id_col, "_is_bench", F.explode(g).alias("g"))
-                   .filter(F.col("g") != "")
-                   .withColumn("gh", F.xxhash64("g"))
-                   .select(id_col, "_is_bench", "gh")
-                   .persist())
-    bench_hashes = grams.filter(F.col("_is_bench")).select("gh").distinct()
-    doc_grams = grams.filter(~F.col("_is_bench"))
-    hits = doc_grams.join(F.broadcast(bench_hashes), "gh")
-    out = (hits.groupBy(id_col)
-               .agg(F.countDistinct("gh").alias("n_overlaps")))
-    out._cached_deps = [grams]
-    return out

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .. import cache
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Dot product of two array<float/double> columns — JVM higher-order fns."""
@@ -577,11 +579,11 @@ def kmeans_assign(emb: DataFrame, k: int = 8, iters: int = 2,
     # persisted: the init collect, each round's update agg and the final
     # assignment all read the same narrow (id, _qx) projection — the
     # unpersisted form re-scanned + re-quantized the source per pass
-    # (round-6).  Released by the caller via _cached_deps.
+    # (round-6).  Released by the caller's cache scope.
     from .text import spread_small_input
-    staged = spread_small_input(
+    staged = cache.persist(spread_small_input(
         emb.select(F.col(id_col), F.col(vec_col))).select(
-        F.col(id_col), qx.alias("_qx")).persist()
+        F.col(id_col), qx.alias("_qx")))
     init_rows = (staged.orderBy(id_col).limit(k).collect())
     dim = len(init_rows[0]["_qx"])
     # fixed-point e-(2*log10(scale)): centroid units are qx*scale
@@ -629,10 +631,8 @@ def kmeans_assign(emb: DataFrame, k: int = 8, iters: int = 2,
                             for d in range(dim)]
         cents = new_cents
 
-    out = (assigned(staged, cents)
-           .select(F.col(id_col), F.col("cluster"), F.col("dist")))
-    out._cached_deps = [staged]
-    return out
+    return (assigned(staged, cents)
+            .select(F.col(id_col), F.col("cluster"), F.col("dist")))
 
 
 def cluster_balanced_sample(emb: DataFrame, k: int = 8, iters: int = 2,
@@ -656,8 +656,6 @@ def cluster_balanced_sample(emb: DataFrame, k: int = 8, iters: int = 2,
     key = (F.pmod(F.col(id_col), F.lit(1048576))
            * F.lit(2654435761)) % F.lit(1048576)
     w = Window.partitionBy("cluster").orderBy(key.asc(), F.col(id_col).asc())
-    out = (asg.withColumn("rnk", F.row_number().over(w).cast("int"))
-              .filter(F.col("rnk") <= quota)
-              .select(id_col, "cluster", "rnk"))
-    out._cached_deps = getattr(asg, "_cached_deps", [])
-    return out
+    return (asg.withColumn("rnk", F.row_number().over(w).cast("int"))
+               .filter(F.col("rnk") <= quota)
+               .select(id_col, "cluster", "rnk"))

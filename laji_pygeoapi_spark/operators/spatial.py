@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .. import cache
 from ..kernels import cells as C
 from ..kernels import geom as G
 from ..kernels import wkb as W
@@ -312,8 +313,8 @@ def knn_join(spark: SparkSession, points: DataFrame, queries: pd.DataFrame,
         return knn_bruteforce_distributed(spark, points, queries, k=k,
                                           lon=lon, lat=lat, point_id=point_id)
     pts = points.withColumn("_cell", hex_cell_udf(res)(F.col(lon), F.col(lat)))
-    pts = pts.select(point_id, lon, lat, "_cell").cache()
-    try:
+    with cache.scope():  # the result is collected: pts dies with the call
+        pts = cache.persist(pts.select(point_id, lon, lat, "_cell"))
         if ring is None:
             stats = pts.agg(F.count(F.lit(1)).alias("n"),
                             F.countDistinct("_cell").alias("c"),
@@ -402,8 +403,6 @@ def knn_join(spark: SparkSession, points: DataFrame, queries: pd.DataFrame,
             _T.StructField("rank", _T.IntegerType()),
         ])
         return spark.createDataFrame([], schema=empty_schema)
-    finally:
-        pts.unpersist()
 
 
 def knn_bruteforce_distributed(spark: SparkSession, points: DataFrame,
@@ -516,12 +515,11 @@ def knn_table_join(left: DataFrame, right: DataFrame, k: int = 3,
     counts are exposed on the result as ``_knn_metrics``.
 
     The candidate frame is persisted (it feeds the done branch, the
-    completeness anti-join, and nothing else); the handle is registered on
-    the result as ``_cached_deps`` for deterministic release.  Returns
-    (left_id, right_id, dist_m, rank) with rank 1..k.
+    completeness anti-join, and nothing else) and registered with the cache
+    scope for deterministic release (``plans.curation.release_caches``).
+    Returns (left_id, right_id, dist_m, rank) with rank 1..k.
     """
     import warnings
-    cached = []
     rp = right.select(F.col(right_id),
                       F.col(lon).alias("_rlon"), F.col(lat).alias("_rlat"))
     kth_deg = None
@@ -529,8 +527,7 @@ def knn_table_join(left: DataFrame, right: DataFrame, k: int = 3,
         # one narrow stats pass sizes everything: n + bbox -> the
         # uniform-density k-th-distance estimate kth_deg (1.5x pad via the
         # 6.0 factor, which also inverts the conservative 0.25 deg->m cover)
-        rp = rp.persist()
-        cached.append(rp)
+        rp = cache.persist(rp)
         stats = rp.agg(F.count(F.lit(1)).alias("n"),
                        F.min("_rlon").alias("x0"), F.max("_rlon").alias("x1"),
                        F.min("_rlat").alias("y0"), F.max("_rlat").alias("y1")).first()
@@ -544,8 +541,6 @@ def knn_table_join(left: DataFrame, right: DataFrame, k: int = 3,
                                                   .dataType))
                      .withColumn("dist_m", F.lit(None).cast("double"))
                      .withColumn("rank", F.lit(None).cast("int")))
-            for c in cached:
-                c.unpersist()
             return empty
         area = max((stats["x1"] - stats["x0"]) * (stats["y1"] - stats["y0"]), 1e-9)
         per_deg2 = stats["n"] / area
@@ -603,8 +598,7 @@ def knn_table_join(left: DataFrame, right: DataFrame, k: int = 3,
     # k-ring guarantees ~inradius coverage; 0.25 is the conservative
     # global deg->m factor for this data domain (see knn_join)
     safe_m = float(C._hex_size(res)) * ring * 111_000 * 0.25
-    ranked = ranked.persist()
-    cached.append(ranked)
+    ranked = cache.persist(ranked)
     complete = (F.col("_cnt") >= k) & (F.col("_kth") <= F.lit(safe_m))
     done = (ranked.filter(complete & (F.col("rank") <= k))
                   .select(left_id, right_id, "dist_m", "rank"))
@@ -623,10 +617,8 @@ def knn_table_join(left: DataFrame, right: DataFrame, k: int = 3,
     n_rest = int(sizes["nr"] or 0)
     metrics = {"res": res, "ring": ring, "n_left": n_left, "n_fallback": n_rest}
     if n_rest == 0:
-        out = done
-        out._cached_deps = cached
-        out._knn_metrics = metrics
-        return out
+        done._knn_metrics = metrics
+        return done
     if n_rest > max_fallback_rows:
         # an EMPTY right side routes every left here even with explicit
         # res/ring (the auto path short-circuits earlier) — the correct
@@ -639,11 +631,7 @@ def knn_table_join(left: DataFrame, right: DataFrame, k: int = 3,
                                                   .dataType))
                      .withColumn("dist_m", F.lit(None).cast("double"))
                      .withColumn("rank", F.lit(None).cast("int")))
-            for h in cached:
-                h.unpersist()
             return empty
-        for h in cached:
-            h.unpersist()
         raise ValueError(
             f"knn_table_join: {n_rest} of {n_left} lefts failed the "
             f"ring-{ring} coverage test and would broadcast into a "
@@ -666,7 +654,6 @@ def knn_table_join(left: DataFrame, right: DataFrame, k: int = 3,
                    .filter(F.col("rank") <= k)
                    .select(left_id, right_id, "dist_m", "rank"))
     out = done.unionByName(fb_ranked)
-    out._cached_deps = cached
     out._knn_metrics = metrics
     return out
 

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import cache
+
 
 def asof_join(left: DataFrame, right: DataFrame, key_cols,
               ts_col: str = "ts", value_cols=("value",),
@@ -111,26 +113,24 @@ def gap_fill_hourly(events: DataFrame, ts_col: str = "ts",
     rollup group, so nothing is lost); the dense grid then LEFT-joins the
     same cached rollup.  Grid size is |groups| x |hours|, independent of
     event count.  Sums are integer cents (cross-engine determinism, same
-    convention as the rollup oracle).  The rollup cache handle is
-    registered on the result (``_cached_deps``) for deterministic release.
+    convention as the rollup oracle).  The rollup cache is registered with
+    the cache scope for deterministic release.
     """
     hour = F.date_trunc("hour", F.col(ts_col))
-    rolled = (events.groupBy(hour.alias("hour"), *group_cols)
+    rolled = cache.persist(
+        events.groupBy(hour.alias("hour"), *group_cols)
               .agg(F.count(F.lit(1)).alias("cnt"),
                    F.round(F.sum(value_col) * 100, 0).cast("long")
-                    .alias("sum_cents"))
-              .persist())
+                    .alias("sum_cents")))
     bounds = rolled.agg(F.min("hour").alias("h0"), F.max("hour").alias("h1"))
     hours = bounds.select(F.explode(F.sequence(
         F.col("h0"), F.col("h1"), F.expr("interval 1 hour"))).alias("hour"))
     groups = rolled.select(*group_cols).distinct()
     grid = hours.crossJoin(F.broadcast(groups))
-    out = (grid.join(rolled, ["hour", *group_cols], "left")
-               .select("hour", *group_cols,
-                       F.coalesce("cnt", F.lit(0)).alias("cnt"),
-                       F.coalesce("sum_cents", F.lit(0)).alias("sum_cents")))
-    out._cached_deps = [rolled]
-    return out
+    return (grid.join(rolled, ["hour", *group_cols], "left")
+                .select("hour", *group_cols,
+                        F.coalesce("cnt", F.lit(0)).alias("cnt"),
+                        F.coalesce("sum_cents", F.lit(0)).alias("sum_cents")))
 
 
 def interval_overlap_join(left: DataFrame, right: DataFrame, key_cols=(),

@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .. import cache
+
 # tiny per-language stopword seeds for the n-gram/stopword heuristic.
 # ASCII-only by construction: tokenize() splits on [^a-z0-9']+, so a marker
 # containing 'ä'/'ö' could never match its own tokenization.
@@ -242,7 +244,7 @@ def top_terms(docs: DataFrame, k: int = 3, text_col: str = "text",
     per-doc top-k is a bounded window.  The tf relation is PERSISTED —
     it feeds both the df aggregate and the join probe side, and the
     unpersisted form re-ran the scan + explode + (doc, term) aggregation
-    once per consumer (round-6; release via ``_cached_deps``).
+    once per consumer (round-6; released by the caller's cache scope).
     Returns (id, term, tf, df, rnk)."""
     staged = (spread_small_input(docs.select(id_col, text_col))
                   .withColumn("_toks", tokenize_udf()(F.col(text_col))))
@@ -252,18 +254,15 @@ def top_terms(docs: DataFrame, k: int = 3, text_col: str = "text",
     # generator OUTPUT is pushdown-proof
     terms = (staged.select(id_col, F.explode_outer("_toks").alias("term"))
                    .filter(F.col("term").isNotNull()))
-    tf = (terms.groupBy(id_col, "term")
-               .agg(F.count(F.lit(1)).alias("tf"))
-               .persist())
+    tf = cache.persist(terms.groupBy(id_col, "term")
+                            .agg(F.count(F.lit(1)).alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy(id_col).orderBy(
         F.col("tf").desc(), F.col("df").asc(), F.col("term").asc())
-    out = (tf.join(dfreq, "term")
-             .withColumn("rnk", F.row_number().over(w).cast("int"))
-             .filter(F.col("rnk") <= k)
-             .select(id_col, "term", "tf", "df", "rnk"))
-    out._cached_deps = [tf]
-    return out
+    return (tf.join(dfreq, "term")
+              .withColumn("rnk", F.row_number().over(w).cast("int"))
+              .filter(F.col("rnk") <= k)
+              .select(id_col, "term", "tf", "df", "rnk"))
 
 
 def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import cache
+from ..cache import release_caches  # noqa: F401  (re-export: bench, jobs)
 from ..operators import dedup as DD
 from ..operators import text as TX
 
@@ -27,8 +29,8 @@ def _curated_survivors(df: DataFrame, lang: str, min_quality: float,
     *extra_cols)`` that every downstream stage reads (round-3 verdict #1:
     the sub-pipelines each re-scanned + re-tokenized the survivor set).
 
-    Returns ``(survivors, caches)`` — every frame in ``caches`` must reach
-    the caller's ``_cached_deps``.  The scored projection is shielded from
+    The survivor projection is registered with the cache scope; release
+    it with :func:`release_caches`.  The scored projection is shielded from
     the lang/quality filter by a GENERATE barrier, not a persist: a filter
     on profile's output columns gets pushed below the staged token
     projection, substituting the whole lang-ID + quality chain (tokenize
@@ -60,18 +62,8 @@ def _curated_survivors(df: DataFrame, lang: str, min_quality: float,
     w = Window.partitionBy("fingerprint").orderBy(F.col(id_col))
     exact = (kept.withColumn("_rn", F.row_number().over(w))
                  .filter(F.col("_rn") == 1).drop("_rn"))
-    surv = exact.select(id_col, "n_tokens", "quality", "_toks",
-                        *extra_cols).persist()
-    return surv, [surv]
-
-
-def release_caches(df: DataFrame) -> None:
-    """Unpersist the cached dependencies a fused pipeline attached to its
-    result (``_cached_deps``) — call AFTER materializing the result.
-    Round-3 ADVICE: the fused entry points persist() projections that
-    otherwise leak cached blocks for the session's lifetime."""
-    for dep in getattr(df, "_cached_deps", ()):
-        dep.unpersist()
+    return cache.persist(exact.select(id_col, "n_tokens", "quality", "_toks",
+                                      *extra_cols))
 
 
 def curate(df: DataFrame, lang: str = "en", min_quality: float = 0.6,
@@ -85,16 +77,14 @@ def curate(df: DataFrame, lang: str = "en", min_quality: float = 0.6,
     signature stage, both shingle sides of the verify join, and the final
     anti-join — all read the single persisted survivor projection
     (release with :func:`release_caches` once materialized)."""
-    surv, caches = _curated_survivors(df, lang, min_quality, text_col, id_col)
+    surv = _curated_survivors(df, lang, min_quality, text_col, id_col)
     toks = surv.select(F.col(id_col).alias("id"), "_toks")
     cand = DD.minhash_lsh_candidates(surv, text_col, id_col, toks=toks)
     dups = DD.jaccard_verify(surv, cand, text_col, id_col,
                              threshold=jaccard_threshold, toks=toks)
     drop = dups.select(F.col("id_b").alias(id_col)).distinct()
-    out = (surv.join(drop, id_col, "left_anti")
-               .select(id_col, "n_tokens", "quality"))
-    out._cached_deps = caches + getattr(dups, "_cached_deps", [])
-    return out
+    return (surv.join(drop, id_col, "left_anti")
+                .select(id_col, "n_tokens", "quality"))
 
 
 def curation_funnel(df: DataFrame, lang: str = "en", min_quality: float = 0.6,
@@ -117,19 +107,18 @@ def curation_funnel(df: DataFrame, lang: str = "en", min_quality: float = 0.6,
                         keep_tokens=True)
     # narrow projection persisted (round-6): the raw text column is never
     # read downstream — caching it doubled the flagged cache for nothing
-    flagged = (scored
-               .withColumn("_lang_ok", F.col("lang_pred") == lang)
-               .withColumn("_q_ok", F.col("_lang_ok")
-                           & (F.col("quality") >= min_quality))
-               .select(id_col, source_col, "n_tokens", "quality",
-                       "fingerprint", "_toks", "_lang_ok", "_q_ok")
-               .persist())
+    flagged = cache.persist(
+        scored.withColumn("_lang_ok", F.col("lang_pred") == lang)
+              .withColumn("_q_ok", F.col("_lang_ok")
+                          & (F.col("quality") >= min_quality))
+              .select(id_col, source_col, "n_tokens", "quality",
+                      "fingerprint", "_toks", "_lang_ok", "_q_ok"))
     w = Window.partitionBy("fingerprint").orderBy(F.col(id_col))
-    surv = (flagged.filter(F.col("_q_ok"))
-                   .withColumn("_rn", F.row_number().over(w))
-                   .filter(F.col("_rn") == 1)
-                   .select(id_col, "n_tokens", "quality", "_toks", source_col)
-                   .persist())
+    surv = cache.persist(
+        flagged.filter(F.col("_q_ok"))
+               .withColumn("_rn", F.row_number().over(w))
+               .filter(F.col("_rn") == 1)
+               .select(id_col, "n_tokens", "quality", "_toks", source_col))
     toks = surv.select(F.col(id_col).alias("id"), "_toks")
     cand = DD.minhash_lsh_candidates(surv, text_col, id_col, toks=toks)
     dups = DD.jaccard_verify(surv, cand, text_col, id_col,
@@ -151,12 +140,10 @@ def curation_funnel(df: DataFrame, lang: str = "en", min_quality: float = 0.6,
     out = (base
            .join(_cnt(surv, "n_exact"), source_col, "left")
            .join(_cnt(final, "n_final"), source_col, "left"))
-    out = out.select(
+    return out.select(
         source_col,
         *[F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
           for c in ("n_total", "n_lang", "n_quality", "n_exact", "n_final")])
-    out._cached_deps = [flagged, surv] + getattr(dups, "_cached_deps", [])
-    return out
 
 
 def deterministic_sample(df: DataFrame, fraction: float,
@@ -204,8 +191,8 @@ def multimodal_curate(df: DataFrame, lang: str = "en", min_quality: float = 0.6,
     final anti-join all read that cache — the round-3 form re-scanned and
     re-tokenized the survivor set in each of three sub-pipelines (14
     scans).  Release with :func:`release_caches` once materialized."""
-    surv, caches = _curated_survivors(df, lang, min_quality, text_col,
-                                      id_col, extra_cols=(phash_col,))
+    surv = _curated_survivors(df, lang, min_quality, text_col, id_col,
+                              extra_cols=(phash_col,))
     toks = surv.select(F.col(id_col).alias("id"), "_toks")
     cand = DD.minhash_lsh_candidates(surv, text_col, id_col, toks=toks)
     text_dups = DD.jaccard_verify(surv, cand, text_col, id_col,
@@ -216,10 +203,8 @@ def multimodal_curate(df: DataFrame, lang: str = "en", min_quality: float = 0.6,
     drop = (text_dups.select(F.col("id_b").alias(id_col))
             .unionByName(img_dups.select(F.col("id_b").alias(id_col)))
             .distinct())
-    out = (surv.join(drop, id_col, "left_anti")
-               .select(id_col, "n_tokens", "quality"))
-    out._cached_deps = caches + getattr(text_dups, "_cached_deps", [])
-    return out
+    return (surv.join(drop, id_col, "left_anti")
+                .select(id_col, "n_tokens", "quality"))
 
 
 def pack_sequences(df: DataFrame, budget: int = 2048,
@@ -251,8 +236,8 @@ def pack_sequences(df: DataFrame, budget: int = 2048,
     # checkpoint the windowed stage: BOTH consumers below (the bucket-total
     # collect and the returned projection) would otherwise re-tokenize and
     # re-window the whole corpus (measured 2x wall)
-    within = (staged.withColumn("_cum_in", F.sum("_n").over(w))
-                    .drop(text_col).localCheckpoint())
+    within = cache.checkpoint(staged.withColumn("_cum_in", F.sum("_n").over(w))
+                                    .drop(text_col))
     totals = {r["_b"]: r["t"] for r in
               within.groupBy("_b").agg(F.max("_cum_in").alias("t")).collect()}
     offsets, acc = {}, 0

@@ -29,6 +29,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
+
 PARTITION_COLS = ("geom_kind", "cell_prefix")
 
 
@@ -125,24 +127,24 @@ def write_partitioned(df: DataFrame, root: str, job_id: str,
     # the upstream plan is evaluated ONCE (round-1 ADVICE: it ran twice);
     # the manifest stays a DELTA record of this job's rows, which an
     # append-mode read-back could not provide
-    df = df.persist()
-    # honor salt_dense_cells: a _salt column splits hot cells across writer
-    # tasks (shuffle key only — it is dropped from the stored table)
-    shuffle_cols = part_cols + (["_salt"] if "_salt" in df.columns else [])
-    out = df.repartition(*[F.col(c) for c in shuffle_cols]) if shuffle_cols else df
-    if "_salt" in df.columns:
-        out = out.drop("_salt")
-        manifest_src = df.drop("_salt")
-    else:
-        manifest_src = df
-    # sort within partitions on the fine cell key: clusters rows so parquet
-    # row-group min/max stats on lon/lat/cell become tight -> rowgroup
-    # pruning on bbox scans (the engine's GIST-index replacement)
-    sort_key = next((c for c in ("cell_r7", "cell_r5", "lon") if c in manifest_src.columns), None)
-    if sort_key:
-        out = out.sortWithinPartitions(sort_key)
-    t0 = time.time()
-    try:
+    with cache.scope():
+        df = cache.persist(df)
+        # honor salt_dense_cells: a _salt column splits hot cells across writer
+        # tasks (shuffle key only — it is dropped from the stored table)
+        shuffle_cols = part_cols + (["_salt"] if "_salt" in df.columns else [])
+        out = df.repartition(*[F.col(c) for c in shuffle_cols]) if shuffle_cols else df
+        if "_salt" in df.columns:
+            out = out.drop("_salt")
+            manifest_src = df.drop("_salt")
+        else:
+            manifest_src = df
+        # sort within partitions on the fine cell key: clusters rows so parquet
+        # row-group min/max stats on lon/lat/cell become tight -> rowgroup
+        # pruning on bbox scans (the engine's GIST-index replacement)
+        sort_key = next((c for c in ("cell_r7", "cell_r5", "lon") if c in manifest_src.columns), None)
+        if sort_key:
+            out = out.sortWithinPartitions(sort_key)
+        t0 = time.time()
         target = os.path.join(root, f"data.staged-{job_id}") if staged \
             else os.path.join(root, "data")
         writer = out.write.mode("overwrite" if staged else mode).partitionBy(*part_cols)
@@ -156,8 +158,6 @@ def write_partitioned(df: DataFrame, root: str, job_id: str,
         write_s = time.time() - t0
         manifest = build_manifest(manifest_src, part_cols,
                                   bloom_col=bloom_col, bloom_bits=bloom_bits)
-    finally:
-        df.unpersist()
     total_rows = sum(p["row_count"] for p in manifest)
     manifest_doc = {
         "job_id": job_id,

@@ -32,6 +32,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..sources import table as store
 from ..sources.fixtures import IMAGES_SCHEMA
 
@@ -80,9 +81,8 @@ def stream_ingest_retile(spark: SparkSession, source_dir: str, root: str,
               .parquet(source_dir))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        prepared = ingest_fused(batch_df).persist()
-        dirty = None
-        try:
+        with cache.scope():
+            prepared = cache.persist(ingest_fused(batch_df))
             n_batch = prepared.count()  # materializes the cache
             # staged=True: exactly-once store append under foreachBatch
             # replay (round-3 ADVICE); the tile rewrite below and the HLL
@@ -96,7 +96,7 @@ def stream_ingest_retile(spark: SparkSession, source_dir: str, root: str,
             # the last unbounded-in-principle driver materialization).
             # The manifest records a BOUNDED sorted sample plus the exact
             # count, so lineage stays driver-sized at any batch width.
-            dirty = prepared.select(tx, ty).distinct().persist()
+            dirty = cache.persist(prepared.select(tx, ty).distinct())
             sample = (dirty.orderBy(tx, ty).limit(MANIFEST_TILE_CAP + 1)
                       .collect())
             truncated = len(sample) > MANIFEST_TILE_CAP
@@ -113,10 +113,6 @@ def stream_ingest_retile(spark: SparkSession, source_dir: str, root: str,
                  "dirty_tiles_truncated": truncated,
                  "n_tiles": n_tiles,
                  "n_batch_rows": n_batch})
-        finally:
-            prepared.unpersist()
-            if dirty is not None:
-                dirty.unpersist()
 
     (stream.writeStream.foreachBatch(process_batch)
            .option("checkpointLocation", checkpoint_dir)

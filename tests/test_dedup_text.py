@@ -9,6 +9,7 @@ import pytest
 from laji_pygeoapi_spark.operators import dedup as DD
 from laji_pygeoapi_spark.operators import similarity as SIM
 from laji_pygeoapi_spark.operators import text as TX
+from laji_pygeoapi_spark.plans.curation import release_caches
 
 
 @pytest.fixture(scope="module")
@@ -563,14 +564,14 @@ def test_connected_components_incremental_equals_rebuild(spark):
         got = {(r["id"], r["comp"]) for r in inc.collect()}
         want = {(r["id"], r["comp"]) for r in full.collect()}
         assert got == want, (trial, got ^ want)
-        for c in getattr(inc, "_cached_deps", []):
-            c.unpersist()
+        release_caches(inc)
 
 
 def test_connected_components_incremental_scopes_work(spark):
     """The re-cluster must be scoped to the delta's neighborhood: with a
     delta touching one small component, the affected label set handed to
     the sub-cluster is that component only, not the corpus."""
+    from laji_pygeoapi_spark import cache
     from laji_pygeoapi_spark.operators.dedup import (
         connected_components, connected_components_incremental)
     # 10 separate 5-cliques (chains): components 0-4, 5-9, ...
@@ -579,13 +580,12 @@ def test_connected_components_incremental_scopes_work(spark):
     b1 = spark.createDataFrame(edges, "id_a: long, id_b: long")
     old = connected_components(b1)
     delta = spark.createDataFrame([(2, 100)], "id_a: long, id_b: long")
-    inc = connected_components_incremental(old, delta)
-    affected = inc._cached_deps[0]
-    assert affected.count() == 5  # one chain, not all 50 vertices
-    got = {r["id"]: r["comp"] for r in inc.collect()}
+    with cache.scope() as frames:
+        inc = connected_components_incremental(old, delta)
+        affected = frames[0]  # the first frame the call registers
+        assert affected.count() == 5  # one chain, not all 50 vertices
+        got = {r["id"]: r["comp"] for r in inc.collect()}
     assert got[100] == 0 and got[4] == 0 and got[5] == 5
-    for c in inc._cached_deps:
-        c.unpersist()
 
 
 def test_ivf_and_ivfpq_incremental_append(spark, tmp_path):
@@ -926,23 +926,28 @@ def test_connected_components_small_graph_fast_path_equivalence(spark):
     assert got_fast == got_slow
     assert len(got_fast) == 80  # isolated vertices kept as singletons
     assert fast._cc_rounds == 0
-    for d in getattr(slow, "_cached_deps", []):
-        d.unpersist()
+    release_caches(slow)
 
 
 def test_connected_components_releases_iteration_checkpoints(spark):
-    """The CC loop must free superseded per-round checkpoints and hand the
-    final one to the caller via _cached_deps (round-5 review: checkpoint
-    blocks accumulated across the shared 60+-query session)."""
+    """The iterative CC path must free every block it creates — the
+    persisted edge list, the partitioned edge checkpoint and every round's
+    label checkpoint — once the caller releases (round-5 review: checkpoint
+    blocks accumulated across the shared 60+-query session).  Asserted on
+    Spark's persistent-RDD registry: ``DataFrame.unpersist()`` on a
+    ``localCheckpoint`` frame frees nothing, so a handle count cannot tell."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     edges = spark.createDataFrame(
         pd.DataFrame([{"id_a": i, "id_b": i + 1} for i in range(0, 40, 2)]))
     out = DD.connected_components(edges, small_graph_max_edges=0)
-    deps = getattr(out, "_cached_deps", [])
-    assert len(deps) == 1  # exactly the final checkpoint survives
     got = {r["id"]: r["comp"] for r in out.collect()}
     assert got[1] == 0 and got[39] == 38
-    for d in deps:
-        d.unpersist()
+    # superseded rounds are freed as the loop advances: only the final
+    # round's checkpoint (backing the result) is live until the release
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1
+    release_caches(out)
+    assert not set(jsc.getPersistentRDDs().keySet()) - before
 
 
 def test_assign_shards_huge_ids_no_overflow(spark):

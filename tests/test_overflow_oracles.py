@@ -14,6 +14,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
+from laji_pygeoapi_spark.plans.curation import release_caches
 
 # default sf0.01 (per-run budget); the closing ritual exercises sf0.1 too:
 #   OVERFLOW_ORACLE_SF_DIR=/root/testdata/sf0.1 pytest tests/test_overflow_oracles.py
@@ -68,8 +69,7 @@ def test_contract_ordering_invariants():
 def test_overflow_query_matches_oracle(spark, duck, name):
     res = entrymod.queries()[name](spark, SF_DIR)
     sdf = res.toPandas()
-    for dep in getattr(res, "_cached_deps", ()):
-        dep.unpersist()  # fused pipelines persist projections
+    release_caches(res)  # fused pipelines persist projections
     odf = duck.sql(entrymod.oracle_sql()[name]).df()
     assert len(sdf) == len(odf), (len(sdf), len(odf))
     assert sorted(map(str.lower, sdf.columns)) == sorted(map(str.lower, odf.columns))

@@ -7,6 +7,7 @@ import pyspark.sql.functions as F
 
 from laji_pygeoapi_spark.kernels import cells as C
 from laji_pygeoapi_spark.operators import spatial as SP
+from laji_pygeoapi_spark.plans.curation import release_caches
 from laji_pygeoapi_spark.sources import fixtures
 
 
@@ -343,8 +344,7 @@ def test_knn_table_join_autoring_bounds_fallback(spark):
                        if ids[j] != qid)
         expect = [pid for _dist, pid in order[:3]]
         assert [pid for _rk, pid in sorted(got[qid])] == expect, qid
-    for c in getattr(out, "_cached_deps", []):
-        c.unpersist()
+    release_caches(out)
 
 
 def test_knn_table_join_fallback_cap_raises(spark):

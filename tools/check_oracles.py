@@ -15,6 +15,7 @@ import pandas as pd
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod  # noqa: E402
+from laji_pygeoapi_spark.plans.curation import release_caches  # noqa: E402
 from laji_pygeoapi_spark.session import get_spark  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -49,8 +50,7 @@ def main() -> None:
         try:
             res = fn(spark, sf_dir)
             sdf = res.toPandas()
-            for dep in getattr(res, "_cached_deps", ()):
-                dep.unpersist()  # fused pipelines persist projections
+            release_caches(res)  # fused pipelines persist projections
         except Exception as exc:  # noqa: BLE001
             print(f"[SPARK-FAIL] {name}: {exc}")
             failures.append(name)
