@@ -86,12 +86,6 @@ def to_tm35fin(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"e": e, "n": n})
 
 
-@pandas_udf(T.StructType([T.StructField("lon", T.DoubleType()), T.StructField("lat", T.DoubleType())]))
-def to_wgs84(e: pd.Series, n: pd.Series) -> pd.DataFrame:
-    lon, lat = crs_kernel.tm35fin_to_wgs84(e.to_numpy(np.float64), n.to_numpy(np.float64))
-    return pd.DataFrame({"lon": lon, "lat": lat})
-
-
 @pandas_udf(T.BinaryType())
 def point_wkb(lon: pd.Series, lat: pd.Series) -> pd.Series:
     """WKB Point bytes from (lon, lat) — Arrow-batched, one slice per row.

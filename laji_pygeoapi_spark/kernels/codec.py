@@ -161,13 +161,6 @@ def fnv1a64(data: bytes) -> int:
     return int(h.astype(np.int64))
 
 
-def fnv1a64_batch(datas: list[bytes]) -> np.ndarray:
-    """Vectorized-ish FNV-1a over a batch (loop over rows is unavoidable for a
-    chained hash; each row's inner loop is numpy).  For large images prefer
-    ``quick_phash``."""
-    return np.array([fnv1a64(d) for d in datas], dtype=np.int64)
-
-
 def quick_phash(img: np.ndarray) -> int:
     """Cheap deterministic 64-bit content hash of decoded pixels: average-hash
     over an 8x8 downsample (a real perceptual-hash construction)."""

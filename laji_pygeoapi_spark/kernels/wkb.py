@@ -76,10 +76,6 @@ def _close_ring(ring: np.ndarray) -> np.ndarray:
     return ring
 
 
-def geom_type(geom) -> str:
-    return geom[0]
-
-
 def geom_kind(geom) -> str:
     """Route geometry to the point/line/polygon family (reference ``edit_db.py:279-283``)."""
     t = geom[0]

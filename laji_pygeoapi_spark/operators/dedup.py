@@ -58,8 +58,6 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 # hashes, see simhash_sql_token_hash) so SimHash is DuckDB-oracle-checkable.
 
 _MERSENNE = (1 << 61) - 1
-_FNV_OFFSET = np.uint64(0xCBF29CE484222325)
-_FNV_PRIME = np.uint64(0x100000001B3)
 
 
 def _codepoint_matrix(strings: list) -> np.ndarray:
@@ -73,18 +71,6 @@ def _codepoint_matrix(strings: list) -> np.ndarray:
     arr = np.asarray(strings, dtype="U")
     width = arr.dtype.itemsize // 4
     return arr.view(np.uint32).reshape(len(strings), width).astype(np.uint64)
-
-
-def _fnv1a64_bulk(strings: list) -> np.ndarray:
-    """Vectorized FNV-1a-64 over codepoints (inputs are ASCII tokens, so
-    codepoints == bytes).  Returns uint64 (n,)."""
-    mat = _codepoint_matrix(strings)
-    h = np.full(mat.shape[0], _FNV_OFFSET, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for col in mat.T:
-            live = col != 0
-            h = np.where(live, (h ^ col) * _FNV_PRIME, h)
-    return h
 
 
 _M32 = np.uint64(0xFFFFFFFF)
@@ -590,8 +576,9 @@ def write_gram_store(benchmark: DataFrame, root: str, n: int = 8,
     gram build runs ONCE at store-build time, and every corpus batch/run
     after that only scans the pre-distinct 8-byte hashes (broadcastable
     by construction — eval sets are thousands of docs, not billions)."""
-    import shutil
     import time
+
+    from ..sources import commit
 
     # VERSIONED data dir + manifest flip (round-5 ADVICE): the previous
     # in-place overwrite deleted the old parquet AND manifest before the
@@ -612,13 +599,10 @@ def write_gram_store(benchmark: DataFrame, root: str, n: int = 8,
     # xxhash64-of-gram-string to xxhash64-of-token-window)
     doc = {"n": n, "n_grams": n_grams, "gram_key": "xxh64-token-window",
            "data": data_name, "created": time.time()}
-    # tmp+rename (sources.table._write_json_atomic): a crash mid-dump must
-    # not leave a truncated manifest that fails every later read
-    from ..sources.table import _write_json_atomic
-    _write_json_atomic(os.path.join(root, "_gram_manifest.json"), doc)
+    commit.write_json(os.path.join(root, "_gram_manifest.json"), doc)
     for d in os.listdir(root):
         if d.startswith("grams-") and d != data_name:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+            commit.discard(os.path.join(root, d))
     return doc
 
 

@@ -159,12 +159,9 @@ def write_metadata_manifest(df: DataFrame, path: str,
     """S8/S9 — persist the per-collection OGC-Records-style manifest as JSON
     (replaces the reference's TinyDB store + pygeoapi-config YAML rewrite,
     ``edit_metadata.py:88-217``, ``edit_config.py:5-58``)."""
-    import json
-    import os
+    from ..sources import commit
     docs = collection_metadata(df, collection_col)
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        json.dump({"collections": docs}, f, ensure_ascii=False, indent=1)
+    commit.write_json(path, {"collections": docs})
     return docs
 
 

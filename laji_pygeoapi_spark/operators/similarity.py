@@ -239,9 +239,9 @@ def _append_partitioned(out: DataFrame, root: str, job_id: str | None) -> None:
 
     ``job_id=None``: plain append (caller guarantees no replays).  With a
     job id, the append is EXACTLY-ONCE under retry/replay via the same
-    staged-commit protocol as the main store (sources/table): skip if this
-    job's marker exists, heal any half-published attempt, stage, move in
-    with a job-prefixed filename, then commit by writing the marker —
+    commit protocol as the main store (:func:`..sources.commit.publish`):
+    skip if this job's marker exists, else publish the batch (discarding
+    a half-published attempt) and commit by writing the marker —
     dot/underscore-prefixed staging and marker paths are invisible to
     parquet readers throughout."""
     writer = out.repartition("ivf_list").write.partitionBy("ivf_list")
@@ -249,17 +249,14 @@ def _append_partitioned(out: DataFrame, root: str, job_id: str | None) -> None:
         writer.mode("append").parquet(root)
         return
     import os
-    from ..sources.table import (_write_json_atomic, heal_staged_files,
-                                 publish_staged_files)
+    import time
+
+    from ..sources import commit
     marker = os.path.join(root, "_appends", f"{job_id}.json")
     if os.path.exists(marker):
         return
-    staging = os.path.join(root, f".staged-{job_id}")
-    heal_staged_files(root, staging, job_id)
-    writer.mode("overwrite").parquet(staging)
-    publish_staged_files(root, staging, job_id)
-    import time
-    _write_json_atomic(marker, {"job_id": job_id, "committed_at": time.time()})
+    commit.publish(root, job_id, writer.mode("overwrite").parquet)
+    commit.write_json(marker, {"job_id": job_id, "committed_at": time.time()})
 
 
 def ivf_append(df: DataFrame, codebook: DataFrame, root: str,

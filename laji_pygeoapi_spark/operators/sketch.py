@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import commit
+
 HASH_BITS = 32
 _MOD32 = 1 << 32
 _MULT = 73244475  # 0x45d9f3b — the murmur/splittable 32-bit mix multiplier
@@ -77,18 +79,6 @@ def key_expr(col: Column, dtype) -> Column:
     if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
         return col.cast("long")
     return F.xxhash64(col)
-
-
-def _rehash(h: Column, row) -> Column:
-    """Independent hash row i from a base hash (h < 2^32): golden-ratio
-    offset then one mix round — the standard double-hashing family.
-    ``row`` may be a python int or a Column.  NOTE: ``h`` is referenced 4×
-    — callers on hot paths must pass a bound ATTRIBUTE (see the staging
-    note on :func:`with_hash32`), not a nested expression."""
-    row_col = F.lit(row) if isinstance(row, int) else row
-    x = (h + row_col * F.lit(0x9E3779B9)) % F.lit(_MOD32)
-    x = (x.bitwiseXOR(F.shiftright(x, 16)) * F.lit(_MULT)) % F.lit(_MOD32)
-    return x.bitwiseXOR(F.shiftright(x, 16))
 
 
 def with_hash32(df: DataFrame, key_col: str, out: str = "_h32") -> DataFrame:
@@ -222,29 +212,20 @@ def update_hll_store(spark, batch_df: DataFrame, root: str, key_col: str,
     """Fold one batch into a PERSISTED register store (tiny parquet, ≤ 2^p
     rows per group) — the incremental form: a stream or nightly delta
     updates cardinality metadata without ever rescanning the table.
-    Registers are max-merged with the stored state and swapped in whole.
-    The swap renames the OLD store aside before installing the new one
-    (round-3 ADVICE: rmtree-then-replace had a window with NO store at all,
-    and the next batch would silently fold into emptiness and under-count
-    until a full rebuild) — a crash now leaves either the old or the new
-    store present, never neither."""
+    Registers are max-merged with the stored state, written to
+    ``<root>.tmp`` and put at ``root`` by one :func:`commit.install`, so a
+    reader sees the old store or the new one at every instant (a window
+    with NO store would make the next batch fold into emptiness and
+    under-count).  The max-merge makes a replay idempotent."""
     import os
-    import shutil
     key = key_expr(F.col(key_col), batch_df.schema[key_col].dataType)
     batch = batch_df.select(*group_cols, key.alias("_k"))
     new = hll_sketch(batch, "_k", group_cols, p)
-    old = root + ".old"
-    if os.path.isdir(old) and not os.path.isdir(root):
-        os.replace(old, root)  # heal a crash between the two renames below
     if os.path.isdir(root):
         new = hll_merge(spark.read.parquet(root), new, group_cols=group_cols)
     tmp = root + ".tmp"
     new.coalesce(1).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(root):
-        os.replace(root, old)
-    os.replace(tmp, root)
-    shutil.rmtree(old, ignore_errors=True)
+    commit.install(tmp, root)
 
 
 def read_hll_store(spark, root: str, group_cols=(), p: int = 8) -> dict:
@@ -359,16 +340,17 @@ def update_quantile_store(spark, batch_df: DataFrame, root: str,
 
     Unlike the HLL registers (max-merge, naturally idempotent), quantile
     counters SUM — a replayed batch would double-count.  Exactly-once
-    therefore comes from layout: each batch's sketch lands in its own
-    ``delta-<batch_id>`` directory with mode=overwrite, so a foreachBatch
-    replay rewrites the same delta instead of adding a second one.
-    Readers merge all deltas (:func:`read_quantile_store`) — counters are
-    associative, so merge order is irrelevant; ``compact_quantile_store``
-    folds deltas into one when the directory count grows.  A batch whose
-    delta was already folded into a compacted delta is SKIPPED on replay
-    (the compacted delta's supersession list is the durable commit record
-    — without the check, replay-after-compaction would recreate the delta
-    and double-count, round-4 review finding #2).
+    therefore comes from layout: each batch's sketch is written to
+    ``_staging-delta-<batch_id>`` and put at ``delta-<batch_id>`` by one
+    :func:`commit.install`, so a ``delta-*`` directory is always complete
+    and a foreachBatch replay replaces the same delta instead of adding a
+    second one.  Readers merge all deltas (:func:`read_quantile_store`) —
+    counters are associative, so merge order is irrelevant;
+    ``compact_quantile_store`` folds deltas into one when the directory
+    count grows.  A batch whose delta was already folded into a compacted
+    delta is SKIPPED on replay (the compacted delta's supersession list is
+    the durable commit record — without the check, replay-after-compaction
+    would recreate the delta and double-count).
 
     ``batch_id=None`` is for one-shot MANUAL folds: the delta gets a fresh
     ``delta-manual-<n>`` name (no replay contract — replay semantics need
@@ -386,8 +368,10 @@ def update_quantile_store(spark, batch_df: DataFrame, root: str,
         while f"delta-manual-{n}" in taken:
             n += 1
         name = f"delta-manual-{n}"
+    staging = os.path.join(root, f"_staging-{name}")
     sk = quantile_sketch(batch_df, value_col, group_cols, b)
-    sk.coalesce(1).write.mode("overwrite").parquet(os.path.join(root, name))
+    sk.coalesce(1).write.mode("overwrite").parquet(staging)
+    commit.install(staging, os.path.join(root, name))
 
 
 def read_quantile_store(spark, root: str, qs=(50, 90, 99), group_cols=(),
@@ -423,12 +407,9 @@ def _superseded_deltas(root: str) -> set[str]:
 
 
 def _live_quantile_deltas(root: str) -> list[str]:
-    """Live = delta-* dirs that are (a) not superseded by a compaction and
-    (b) COMPLETE — carry the _SUCCESS marker Spark's committer writes last.
-    A crashed ``update_quantile_store`` that is never replayed (manual fold,
-    abandoned stream) leaves a torn delta whose present part-files would
-    silently under-count; skipping marker-less dirs makes the reader see
-    exactly the committed batches (round-4 ADVICE)."""
+    """Live = delta-* dirs not superseded by a compaction.  The
+    ``_SUCCESS`` check skips the torn deltas that stores written before
+    deltas were installed whole can still hold."""
     import os
     if not os.path.isdir(root):
         return []
@@ -438,49 +419,17 @@ def _live_quantile_deltas(root: str) -> list[str]:
             for d in sorted(deltas - _superseded_deltas(root))]
 
 
-def _torn_quantile_deltas(root: str) -> list[str]:
-    import os
-    if not os.path.isdir(root):
-        return []
-    return [os.path.join(root, d) for d in sorted(os.listdir(root))
-            if d.startswith("delta-")
-            and not os.path.exists(os.path.join(root, d, "_SUCCESS"))]
-
-
-def compact_quantile_store(spark, root: str, group_cols=(),
-                           torn_grace_s: float = 600.0) -> None:
-    """Fold the live delta directories into one.  Crash-safe by
-    supersession marker, not by ordering hope: the compacted delta is
-    fully written (with ``_superseded.json`` naming its inputs) and
-    renamed into place FIRST — from that instant readers ignore the
-    inputs — and only then are the superseded directories deleted.  A
-    crash at any point leaves either the old deltas alone or the
-    compacted delta plus ignorable leftovers; counters are never lost or
-    double-merged."""
+def compact_quantile_store(spark, root: str, group_cols=()) -> None:
+    """Fold the live delta directories into one, on the :mod:`commit`
+    protocol: the compacted delta is fully written (with the
+    ``_superseded.json`` record naming its inputs) and installed FIRST —
+    from that instant readers ignore the inputs — and only then are the
+    superseded directories deleted, here or, after a crash, by the next
+    compaction.  Counters are never lost or double-merged."""
     import hashlib
-    import json
     import os
-    import shutil
-    import time
-    # sweep torn deltas (no _SUCCESS): readers already skip them; a
-    # replayed batch_id overwrites its dir anyway, and an abandoned one is
-    # garbage that would otherwise accumulate forever.  GRACE WINDOW
-    # (round-5 review): a delta being written RIGHT NOW also has no
-    # _SUCCESS yet — deleting it under a concurrent writer could race the
-    # committer into a marker-with-no-part-files dir whose counters are
-    # silently lost.  Only deltas untouched for ``torn_grace_s`` are
-    # abandoned enough to sweep (``torn_grace_s`` parameterised so tests /
-    # offline maintenance that KNOW no writer is live can pass 0).
-    now = time.time()
-    for torn in _torn_quantile_deltas(root):
-        try:
-            newest = max((os.path.getmtime(os.path.join(torn, f))
-                          for f in os.listdir(torn)),
-                         default=os.path.getmtime(torn))
-        except OSError:
-            continue  # vanished mid-scan: a writer/committer owns it
-        if now - newest > torn_grace_s:
-            shutil.rmtree(torn, ignore_errors=True)
+    for name in _superseded_deltas(root):
+        commit.discard(os.path.join(root, name))
     live = _live_quantile_deltas(root)
     if len(live) <= 1:
         return
@@ -489,10 +438,11 @@ def compact_quantile_store(spark, root: str, group_cols=(),
                             group_cols=group_cols)
     tag = hashlib.sha1(",".join(names).encode()).hexdigest()[:10]
     tmp = os.path.join(root, "_compact.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
     merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_superseded.json"), "w") as f:
-        json.dump(names, f)
-    os.replace(tmp, os.path.join(root, f"delta-compact-{tag}"))
+    # the record also carries the names its compacted inputs superseded,
+    # so deleting an older compacted delta keeps their replays no-ops
+    commit.write_json(os.path.join(tmp, "_superseded.json"),
+                      sorted(set(names) | _superseded_deltas(root)))
+    commit.install(tmp, os.path.join(root, f"delta-compact-{tag}"))
     for name in names:
-        shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+        commit.discard(os.path.join(root, name))

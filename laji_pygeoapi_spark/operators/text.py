@@ -89,17 +89,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokenize(col))
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    toks = tokenize(col)
-    stops = F.array(*[F.lit(w) for w in _LANG_MARKERS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def lang_id(col: Column) -> Column:
     """Stopword-marker language ID: the language whose markers intersect the
     most *distinct* tokens wins; ties break in list order (en, fi, sv, de);
@@ -116,21 +105,6 @@ def lang_id(col: Column) -> Column:
         best_lang = F.when(cond, F.lit(lang)).otherwise(best_lang)
         best_hits = F.when(cond, hits[lang]).otherwise(best_hits)
     return F.when(best_hits > 0, best_lang)
-
-
-def quality_score(col: Column) -> Column:
-    """Heuristic document quality in [0,1]: length band + punctuation
-    density + mean word length band (C4-style filters, rescaled)."""
-    n_chars = F.length(col)
-    toks = tokenize(col)
-    n_tok = F.size(toks)
-    mean_wl = F.when(n_tok > 0, n_chars / n_tok).otherwise(F.lit(0.0))
-    punct = F.length(F.regexp_replace(col, r"[^.!?,;:]", ""))
-    punct_ratio = F.when(n_chars > 0, punct / n_chars).otherwise(F.lit(0.0))
-    len_ok = F.when((n_chars >= 50) & (n_chars <= 20000), 1.0).otherwise(0.3)
-    wl_ok = F.when((mean_wl >= 3.0) & (mean_wl <= 12.0), 1.0).otherwise(0.4)
-    punct_ok = F.when(punct_ratio <= 0.1, 1.0).otherwise(0.5)
-    return F.round((len_ok + wl_ok + punct_ok) / 3.0, 4)
 
 
 def fingerprint64(col: Column) -> Column:

@@ -7,7 +7,6 @@ translation (``convert_api_filters.py:41-56``) and merge policies
 (``edit_db.py:392-397``).  We keep the same registry as structured Python data
 and derive from it:
 
-* the fixed output ``StructType`` (the "virva" schema, 57 columns),
 * the single ``select`` projection (rename + cast) for the transform chain,
 * the groupBy/agg plan for the merge job,
 * the OGC-filter-name -> source-filter-name map.
@@ -22,8 +21,6 @@ geom -> WKB BinaryType.
 from __future__ import annotations
 
 from dataclasses import dataclass
-
-from pyspark.sql import types as T
 
 
 @dataclass(frozen=True)
@@ -97,31 +94,6 @@ COLUMNS: list[ColumnSpec] = [
     ColumnSpec("", "", "", "Paikallinen_tunniste", "str", "AGGREGATE"),
     ColumnSpec("", "", "", "Yhdistetty", "int", ""),
 ]
-
-_SPARK_TYPES = {
-    "str": T.StringType(),
-    "int": T.LongType(),
-    "double": T.DoubleType(),
-    "datetime": T.DateType(),
-    "bool": T.BooleanType(),
-    "geom": T.BinaryType(),
-}
-
-
-def virva_schema() -> T.StructType:
-    """The fixed 57-column output StructType (all nullable, like the reference)."""
-    return T.StructType([T.StructField(c.virva, _SPARK_TYPES[c.type], True) for c in COLUMNS])
-
-
-def rename_map() -> dict[str, str]:
-    """finbif api var -> virva name (reference ``process_data.py:100``)."""
-    return {c.api_var: c.virva for c in COLUMNS if c.api_var}
-
-
-def type_map() -> dict[str, str]:
-    """virva name -> declared type string."""
-    return {c.virva: c.type for c in COLUMNS}
-
 
 def merge_policy() -> dict[str, list[str]]:
     """merge_option -> list of virva columns (reference ``edit_db.py:392-397``)."""

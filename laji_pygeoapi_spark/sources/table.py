@@ -6,7 +6,12 @@ container; the write/read contract mirrors ``writeTo(...).append()``):
 
     <root>/data/geom_kind=<k>/cell_prefix=<c>/part-*.parquet
     <root>/_manifests/manifest-<job_id>.json     (per-partition lineage)
+    <root>/_manifests/archived/                  (deltas a compaction superseded)
     <root>/_checkpoints/<job_id>.json            (completed-step markers)
+
+Every write goes through :mod:`.commit`: new data lands in a private path,
+becomes visible in one step, and the manifest written after it is the
+commit record.  Readers never repair the store.
 
 One logical table with ``geom_kind`` + ``cell_prefix`` partition columns
 replaces the reference's 66 physical PostGIS tables
@@ -30,19 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
+from . import commit
 
 PARTITION_COLS = ("geom_kind", "cell_prefix")
-
-
-def _write_json_atomic(path: str, doc: dict) -> None:
-    """tmp-file + os.replace so a crash mid-write can never leave truncated
-    JSON behind (checkpoint/manifest files are exactly the state a resume
-    must be able to trust — round-1 ADVICE)."""
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(doc, f, indent=1)
-    os.replace(tmp, path)
 
 
 def write_partitioned(df: DataFrame, root: str, job_id: str,
@@ -68,60 +63,25 @@ def write_partitioned(df: DataFrame, root: str, job_id: str,
 
     ``staged=True``: EXACTLY-ONCE append (round-3 ADVICE — foreachBatch
     replays a batch whose checkpoint didn't commit, and a plain append
-    would duplicate its rows).  Iceberg-style commit protocol on plain
-    files: (1) if this job's manifest already exists the append is
-    committed — return it unchanged; (2) delete any ``<job_id>-*`` data
-    files left by a half-published attempt; (3) write the batch to a
-    private ``data.staged-<job_id>`` directory; (4) move each parquet file
-    into the live tree under a ``<job_id>-`` filename prefix; (5) publish
-    by atomically writing the manifest — the single commit point.  A crash
-    anywhere before (5) is healed by the replay at (2); after (5) the
-    replay is a no-op at (1)."""
+    would duplicate its rows), on the :mod:`.commit` protocol.  The commit
+    record is ``manifest-<job_id>.json`` in ``_manifests/`` or, once a
+    compaction has superseded it, ``_manifests/archived/``: if it exists
+    the replay returns it unchanged.  Otherwise :func:`commit.publish`
+    discards what an earlier attempt left, stages the batch privately and
+    moves its files into the live tree under a ``<job_id>-`` prefix; the
+    manifest write is the commit point.  Until then the job's files are
+    uncommitted: a replay or the next :func:`compact_store` discards
+    them."""
     part_cols = [c for c in partition_cols if c in df.columns]
     if bloom_col:
         _check_bloom_dtype(df, bloom_col)
     manifest_path = os.path.join(root, "_manifests", f"manifest-{job_id}.json")
-    commit_marker = os.path.join(root, "_commits", f"{job_id}.json")
     if staged:
-        archived = os.path.join(root, "_manifests", "archived",
-                                f"manifest-{job_id}.json")
-        if os.path.exists(manifest_path):  # committed — replay is a no-op
-            with open(manifest_path) as f:
-                doc = json.load(f)
-            if not os.path.exists(commit_marker):
-                # self-heal: a crash BETWEEN the manifest write and the
-                # marker write left a committed append with no durable
-                # record.  Backfill the marker now, else a later compaction
-                # (which archives the manifest and renames the job-prefixed
-                # files) would make the NEXT replay re-append the batch —
-                # permanent duplication (round-4 ADVICE, medium).
-                _write_json_atomic(commit_marker,
-                                   {"job_id": job_id,
-                                    "committed_at": time.time(),
-                                    "total_rows": doc.get("total_rows")})
-            return doc
-        if os.path.exists(commit_marker):
-            # committed, but the manifest was archived by a later
-            # compaction (which also erased the job-prefixed filenames) —
-            # without this durable marker the replay would re-append the
-            # batch permanently (round-4 review finding #1)
-            if os.path.exists(archived):
-                with open(archived) as f:
+        for path in (manifest_path, os.path.join(root, "_manifests", "archived",
+                                                 f"manifest-{job_id}.json")):
+            if os.path.exists(path):  # committed — replay is a no-op
+                with open(path) as f:
                     return json.load(f)
-            with open(commit_marker) as f:
-                return json.load(f)
-        if os.path.exists(archived):
-            # marker missing AND live manifest gone, but the archive proves
-            # the append committed before compaction swept it (the
-            # marker-backfill above can only run if a replay happens before
-            # compaction).  Treat as committed and backfill the marker.
-            with open(archived) as f:
-                doc = json.load(f)
-            _write_json_atomic(commit_marker,
-                               {"job_id": job_id, "committed_at": time.time(),
-                                "total_rows": doc.get("total_rows")})
-            return doc
-        _heal_staged(root, job_id)
     # persist the batch FIRST so both consumers below (the partitioned write
     # and the manifest aggregation) resolve to the same cached subtree and
     # the upstream plan is evaluated ONCE (round-1 ADVICE: it ran twice);
@@ -145,16 +105,16 @@ def write_partitioned(df: DataFrame, root: str, job_id: str,
         if sort_key:
             out = out.sortWithinPartitions(sort_key)
         t0 = time.time()
-        target = os.path.join(root, f"data.staged-{job_id}") if staged \
-            else os.path.join(root, "data")
+        data_dir = os.path.join(root, "data")
         writer = out.write.mode("overwrite" if staged else mode).partitionBy(*part_cols)
         if bloom_col:
             writer = (writer.option(f"parquet.bloom.filter.enabled#{bloom_col}", "true")
                             .option(f"parquet.bloom.filter.expected.ndv#{bloom_col}",
                                     str(max(bloom_bits // 10, 64))))
-        writer.parquet(target)
         if staged:
-            _publish_staged(root, job_id)
+            commit.publish(data_dir, job_id, writer.parquet)
+        else:
+            writer.parquet(data_dir)
         write_s = time.time() - t0
         manifest = build_manifest(manifest_src, part_cols,
                                   bloom_col=bloom_col, bloom_bits=bloom_bits)
@@ -175,56 +135,8 @@ def write_partitioned(df: DataFrame, root: str, job_id: str,
     if bloom_col:
         manifest_doc["bloom"] = {"col": bloom_col, "bits": bloom_bits,
                                  "k": _BLOOM_K}
-    _write_json_atomic(os.path.join(root, "_manifests", f"manifest-{job_id}.json"),
-                       manifest_doc)
-    if staged:
-        # durable commit record that survives manifest archival (compaction)
-        _write_json_atomic(commit_marker,
-                           {"job_id": job_id, "committed_at": time.time(),
-                            "total_rows": total_rows})
+    commit.write_json(manifest_path, manifest_doc)
     return manifest_doc
-
-
-def heal_staged_files(data_dir: str, staging_dir: str, job_id: str) -> None:
-    """Remove every trace of an UNCOMMITTED staged append for ``job_id``:
-    its ``<job_id>-`` prefixed data files and its staging directory.  Safe
-    only when the caller has verified the commit marker is absent — these
-    files would duplicate rows once the replay re-appends them."""
-    import shutil
-    shutil.rmtree(staging_dir, ignore_errors=True)
-    prefix = f"{job_id}-"
-    for dirpath, _dirnames, filenames in os.walk(data_dir):
-        for fname in filenames:
-            if fname.startswith(prefix):
-                os.remove(os.path.join(dirpath, fname))
-
-
-def publish_staged_files(data_dir: str, staging_dir: str, job_id: str) -> None:
-    """Move a staged write's parquet files into the live tree under a
-    ``<job_id>-`` filename prefix (so :func:`heal_staged_files` can
-    identify them), then drop the staging directory.  Rename-only — no
-    data copy on a same-filesystem store."""
-    import shutil
-    for dirpath, _dirnames, filenames in os.walk(staging_dir):
-        rel = os.path.relpath(dirpath, staging_dir)
-        for fname in filenames:
-            if not fname.endswith(".parquet"):
-                continue  # _SUCCESS / .crc markers stay behind
-            dest_dir = data_dir if rel == "." else os.path.join(data_dir, rel)
-            os.makedirs(dest_dir, exist_ok=True)
-            os.replace(os.path.join(dirpath, fname),
-                       os.path.join(dest_dir, f"{job_id}-{fname}"))
-    shutil.rmtree(staging_dir, ignore_errors=True)
-
-
-def _heal_staged(root: str, job_id: str) -> None:
-    heal_staged_files(os.path.join(root, "data"),
-                      os.path.join(root, f"data.staged-{job_id}"), job_id)
-
-
-def _publish_staged(root: str, job_id: str) -> None:
-    publish_staged_files(os.path.join(root, "data"),
-                         os.path.join(root, f"data.staged-{job_id}"), job_id)
 
 
 _BLOOM_K = 4  # hash rows per key (FPR ≈ (1 - e^(-k·n/bits))^k)
@@ -338,40 +250,7 @@ def build_manifest(df: DataFrame, part_cols, bloom_col: str | None = None,
     return out
 
 
-def _recover_compaction(root: str) -> None:
-    """Heal a store whose compaction crashed between the two directory
-    renames (ADVICE round-2: the 'atomic swap' is two os.replace calls; a
-    crash in the gap leaves NO data/ directory).  Recovery rolls BACK to
-    the newest ``data.pre-compact-*`` snapshot — always safe because the
-    pre-compact data is the verified source the swap started from — and
-    discards any half-written ``data.compact``.
-
-    Snapshot selection is by directory mtime, NOT name sort — job ids need
-    not sort chronologically (round-3 ADVICE).  When ``data/`` already
-    exists, any ``data.pre-compact-*`` snapshot is STRANDED garbage (the
-    swap completed but the cleanup rmtree did not); it is removed here so a
-    later crash can never roll back to a stale snapshot and silently drop
-    appends."""
-    import shutil
-    data_dir = os.path.join(root, "data")
-    stranded = [d for d in os.listdir(root) if d.startswith("data.pre-compact-")] \
-        if os.path.isdir(root) else []
-    if os.path.isdir(data_dir):
-        for d in stranded:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        return
-    if stranded:
-        newest = max(stranded,
-                     key=lambda d: os.path.getmtime(os.path.join(root, d)))
-        os.replace(os.path.join(root, newest), data_dir)
-        for d in stranded:
-            if d != newest:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        shutil.rmtree(os.path.join(root, "data.compact"), ignore_errors=True)
-
-
 def read_table(spark: SparkSession, root: str) -> DataFrame:
-    _recover_compaction(root)  # heal crash gap / sweep stranded snapshots
     return spark.read.parquet(os.path.join(root, "data"))
 
 
@@ -413,7 +292,7 @@ def mark_step(root: str, job_id: str, step: str, info: dict | None = None) -> No
     ck = load_checkpoint(root, job_id)
     if step not in [s["step"] for s in ck["completed_steps"]]:
         ck["completed_steps"].append({"step": step, "at": time.time(), **(info or {})})
-    _write_json_atomic(_ckpt_path(root, job_id), ck)
+    commit.write_json(_ckpt_path(root, job_id), ck)
 
 
 def step_done(root: str, job_id: str, step: str) -> bool:
@@ -442,7 +321,7 @@ def load_watermark(root: str, name: str = "last_update") -> str | None:
 
 def save_watermark(root: str, value: str, name: str = "last_update") -> None:
     path = os.path.join(root, "_checkpoints", f"wm-{name}.json")
-    _write_json_atomic(path, {"name": name, "value": value})
+    commit.write_json(path, {"name": name, "value": value})
 
 
 # ------------------------------------------------------------ compaction
@@ -455,21 +334,39 @@ def compact_store(spark: SparkSession, root: str, job_id: str,
     10^12 rows the file count, not the byte count, kills scan planning).
 
     Rewrites each physical partition down to ``max_files_per_partition``
-    files via a directory swap (write to ``data.compact``, verify,
-    ``os.replace`` twice — a crash in the gap between the two renames is
-    healed by :func:`_recover_compaction`, which read/compact paths run
-    automatically), then records a SNAPSHOT manifest for the whole
-    compacted table and archives the superseded delta manifests to
-    ``_manifests/archived/`` (ADVICE round-2: leaving them in place made
-    ``count_from_manifest`` double-count every row).
-    Correctness is checked BEFORE the swap with the same order-invariant
-    xor checksum the lineage manifests use: compaction must preserve every
-    row exactly, and the checksum proves it without a sort."""
-    import shutil
-    _recover_compaction(root)
+    files in ``data.compact``, checks it, then follows the :mod:`.commit`
+    protocol: :func:`commit.install` puts it at ``data`` in one atomic
+    step, the SNAPSHOT manifest for the whole compacted table is the
+    commit record, and only after it are the superseded delta manifests
+    archived to ``_manifests/archived/`` (left in place, they would make
+    ``count_from_manifest`` double-count every row).  Readers
+    ignore deltas older than the newest snapshot, so a crash mid-archive
+    changes no count; before the snapshot lands the old deltas still
+    describe the same rows.
+
+    First, the ``<job_id>-part-*`` files of staged appends that never
+    wrote their manifest are discarded: folded under plain names, the
+    job's replay could no longer find them and would append its rows a
+    second time.  Compaction must not run during an append.
+
+    Correctness is checked BEFORE the install with the same
+    order-invariant xor checksum the lineage manifests use: compaction
+    must preserve every row exactly, and the checksum proves it without a
+    sort."""
     data_dir = os.path.join(root, "data")
     tmp_dir = os.path.join(root, "data.compact")
-    old_dir = os.path.join(root, f"data.pre-compact-{job_id}")
+    mdir = os.path.join(root, "_manifests")
+    adir = os.path.join(mdir, "archived")
+    snapshot = f"manifest-{job_id}.json"
+    superseded = sorted(f for f in _listdir(mdir)
+                        if f.endswith(".json") and f != snapshot)
+    committed = {f[len("manifest-"):-len(".json")]
+                 for f in superseded + _listdir(adir)}
+    for dirpath, _dirnames, filenames in os.walk(data_dir):
+        for fname in filenames:
+            cut = fname.rfind("-part-")
+            if cut > 0 and fname[:cut] not in committed:
+                commit.discard(os.path.join(dirpath, fname))
     df = spark.read.parquet(data_dir)
     part_cols = [c for c in partition_cols if c in df.columns]
     # carry the bloom index through compaction: the snapshot manifest must
@@ -489,11 +386,9 @@ def compact_store(spark: SparkSession, root: str, job_id: str,
         return {tuple(r[c] for c in part_cols): (r["row_count"], r["checksum"])
                 for r in rows}
     if keyed(before) != keyed(after):
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+        commit.discard(tmp_dir)
         raise RuntimeError("compaction checksum mismatch — store left untouched")
-    os.replace(data_dir, old_dir)
-    os.replace(tmp_dir, data_dir)
-    shutil.rmtree(old_dir, ignore_errors=True)
+    commit.install(tmp_dir, data_dir)
     doc = {
         "job_id": job_id, "written_at": time.time(),
         "partition_cols": part_cols, "partitions": after,
@@ -504,19 +399,15 @@ def compact_store(spark: SparkSession, root: str, job_id: str,
     }
     if bloom_meta:
         doc["bloom"] = bloom_meta
-    # archive the superseded delta manifests BEFORE publishing the snapshot:
-    # if we crash mid-archive, counts are under (a delta is missing but the
-    # snapshot is not yet there) only until the next compact; publishing
-    # first would double-count until the archive finished
-    mdir = os.path.join(root, "_manifests")
-    adir = os.path.join(mdir, "archived")
-    if os.path.isdir(mdir):
-        os.makedirs(adir, exist_ok=True)
-        for fname in os.listdir(mdir):
-            if fname.endswith(".json"):
-                os.replace(os.path.join(mdir, fname), os.path.join(adir, fname))
-    _write_json_atomic(os.path.join(root, "_manifests", f"manifest-{job_id}.json"), doc)
+    commit.write_json(os.path.join(mdir, snapshot), doc)
+    os.makedirs(adir, exist_ok=True)
+    for fname in superseded:
+        commit.install(os.path.join(mdir, fname), os.path.join(adir, fname))
     return doc
+
+
+def _listdir(path: str) -> list[str]:
+    return os.listdir(path) if os.path.isdir(path) else []
 
 
 # ------------------------------------------------------------ partition admin
@@ -581,7 +472,6 @@ def drop_partitions(root: str, **filters) -> int:
     name partition columns only (ValueError otherwise); empty filters drop
     everything (the reference's drop_all_tables).
     """
-    import shutil
     live = _live_manifests(root)
     if live:
         part_cols = set(live[0]["partition_cols"])
@@ -600,7 +490,7 @@ def drop_partitions(root: str, **filters) -> int:
                 if path not in seen_paths:
                     seen_paths.add(path)
                     if os.path.isdir(path):
-                        shutil.rmtree(path)
+                        commit.discard(path)
                         dropped_dirs += 1
             else:
                 keep.append(p)
@@ -608,7 +498,7 @@ def drop_partitions(root: str, **filters) -> int:
         updated = {k: v for k, v in doc.items() if k != "file"}
         updated["partitions"] = keep
         updated["total_rows"] = sum(p["row_count"] for p in keep)
-        _write_json_atomic(doc_path, updated)
+        commit.write_json(doc_path, updated)
     return dropped_dirs
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
+from ..sources import commit
 from ..sources import table as store
 from ..sources.fixtures import IMAGES_SCHEMA
 
@@ -105,7 +106,7 @@ def stream_ingest_retile(spark: SparkSession, source_dir: str, root: str,
                 return
             retile_dirty(spark, root, tiles_root, dirty, zoom=zoom,
                          thumb=thumb, max_per_tile=max_per_tile)
-            store._write_json_atomic(
+            commit.write_json(
                 os.path.join(tiles_root, "_manifests", f"retile-{batch_id}.json"),
                 {"batch_id": batch_id, "zoom": zoom, "written_at": time.time(),
                  "dirty_tiles": sorted([int(r[tx]), int(r[ty])]

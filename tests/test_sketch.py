@@ -326,32 +326,3 @@ def test_stream_quantiles_matches_batch(spark, tmp_path):
     again = {(r["g"], r["q"]): r["est"] for r in
              SK.read_quantile_store(spark, root, (50, 90, 99), ("g",)).collect()}
     assert again == want
-
-
-def test_quantile_compaction_grace_spares_fresh_torn_delta(spark, tmp_path):
-    """A torn delta (no _SUCCESS) that is STILL BEING WRITTEN must survive
-    the compaction sweep; only abandoned ones (past the grace window) are
-    removed (round-5 review: the unconditional sweep raced live writers)."""
-    import os
-    import time as _t
-    from laji_pygeoapi_spark.operators import sketch as SK
-    root = str(tmp_path / "qstore")
-    for b in (1, 2):
-        SK.update_quantile_store(
-            spark, spark.range(100 * b).selectExpr("id AS v"),
-            root, "v", batch_id=b)
-    fresh = os.path.join(root, "delta-torn-fresh")
-    os.makedirs(fresh)
-    open(os.path.join(fresh, "part-000"), "w").write("x")
-    stale = os.path.join(root, "delta-torn-stale")
-    os.makedirs(stale)
-    open(os.path.join(stale, "part-000"), "w").write("x")
-    old = _t.time() - 3600
-    os.utime(os.path.join(stale, "part-000"), (old, old))
-    os.utime(stale, (old, old))
-    SK.compact_quantile_store(spark, root)
-    assert os.path.isdir(fresh), "fresh torn delta must survive the sweep"
-    assert not os.path.isdir(stale), "abandoned torn delta must be swept"
-    # reads still skip the surviving torn dir
-    out = SK.read_quantile_store(spark, root)
-    assert out.count() > 0

@@ -271,29 +271,6 @@ def test_manifest_count_exact_after_compaction(spark, root):
     assert {"manifest-d1.json", "manifest-d2.json"} <= set(archived)
 
 
-def test_compaction_crash_recovery(spark, root):
-    """ADVICE round-2: a crash between the two os.replace calls of the swap
-    leaves no data/ — read_table and compact_store auto-heal by rolling
-    back to the stranded pre-compact snapshot."""
-    import os
-    import shutil
-    imgs = fixtures.images_df(spark, 100, with_bytes=False)
-    store.write_partitioned(ING.ingest_fused(imgs), root, "j1")
-    n = store.read_table(spark, root).count()
-    # simulate the torn state: data/ renamed away, half-written data.compact
-    os.replace(os.path.join(root, "data"), os.path.join(root, "data.pre-compact-x"))
-    os.makedirs(os.path.join(root, "data.compact"))
-    got = store.read_table(spark, root)
-    assert got.count() == n
-    assert os.path.isdir(os.path.join(root, "data"))
-    assert not os.path.isdir(os.path.join(root, "data.compact"))
-    # and compact_store on a torn store heals then compacts normally
-    os.replace(os.path.join(root, "data"), os.path.join(root, "data.pre-compact-y"))
-    doc = store.compact_store(spark, root, "c-heal")
-    assert doc["total_rows"] == n
-    shutil.rmtree(root)
-
-
 # ------------------------------------------------- partial-cell bbox counts
 
 FINLAND = (19.083, 59.454, 31.587, 70.092)
@@ -562,7 +539,6 @@ def test_staged_append_exactly_once(spark, root):
     # crash-before-commit replay: data files landed, but neither the
     # manifest nor the durable commit marker was written
     os.remove(os.path.join(root, "_manifests", "manifest-b0.json"))
-    os.remove(os.path.join(root, "_commits", "b0.json"))
     healed = store.write_partitioned(imgs, root, "b0", staged=True)
     assert healed["total_rows"] == 200
     assert store.read_table(spark, root).count() == 200  # not 400
@@ -591,40 +567,11 @@ def test_bloom_col_dtype_validated(spark, root):
     store.write_partitioned(ok, str(root) + "2", "ok2", bloom_col="nid")
 
 
-def test_recover_compaction_cleans_stranded_snapshots(spark, root):
-    """Round-3 ADVICE: once data/ exists, any data.pre-compact-* snapshot
-    is stranded garbage that a later crash could roll back to (silently
-    dropping appends) — read/compact paths must remove it."""
-    imgs = ING.ingest_fused(fixtures.images_df(spark, 100, with_bytes=False))
-    store.write_partitioned(imgs, root, "j1")
-    stale = os.path.join(root, "data.pre-compact-zzz")
-    os.makedirs(stale)
-    assert store.read_table(spark, root).count() == 100
-    assert not os.path.isdir(stale)
-
-
-def test_hll_store_swap_never_absent(spark, tmp_path):
-    """Round-3 ADVICE: the register-store swap keeps either old or new
-    state on disk at every instant; the heal path restores a store stranded
-    at '<root>.old' by a crash between the two renames."""
-    from laji_pygeoapi_spark.operators import sketch as SK
-    sroot = str(tmp_path / "hll")
-    df = fixtures.images_df(spark, 300, with_bytes=False)
-    a = df.filter(F.col("image_id") < "IMG_000000150")
-    b = df.filter(F.col("image_id") >= "IMG_000000150")
-    SK.update_hll_store(spark, a, sroot, "image_id")
-    # simulate the crash window: store renamed aside, new never installed
-    os.replace(sroot, sroot + ".old")
-    SK.update_hll_store(spark, b, sroot, "image_id")
-    est = SK.read_hll_store(spark, sroot)[()]
-    assert abs(est - 300) / 300 < 0.15  # folded BOTH batches, not just b
-
-
 def test_staged_append_replay_after_compaction(spark, root):
     """Round-4 review finding #1: compaction archives the per-batch
-    manifest AND erases job-prefixed filenames, so the manifest alone
-    cannot be the staged append's commit record — the durable _commits
-    marker must make a post-compaction replay a no-op."""
+    manifest AND erases job-prefixed filenames, so the live manifest alone
+    cannot be the staged append's commit record — the archived manifest
+    must make a post-compaction replay a no-op."""
     imgs = ING.ingest_fused(fixtures.images_df(spark, 150, with_bytes=False))
     store.write_partitioned(imgs, root, "s0", staged=True)
     assert store.read_table(spark, root).count() == 150
@@ -635,37 +582,6 @@ def test_staged_append_replay_after_compaction(spark, root):
     assert doc["total_rows"] == 150
     assert store.read_table(spark, root).count() == 150  # not 300
     assert store.count_from_manifest(root) == 150
-
-
-def test_staged_append_crash_between_manifest_and_marker(spark, root):
-    """Round-4 ADVICE (medium): the staged commit is two writes — manifest
-    then _commits marker.  A crash BETWEEN them leaves a committed append
-    with no marker; if compaction then archives the manifest, a replay that
-    finds neither must consult _manifests/archived/ (and backfill the
-    marker) instead of re-appending the batch permanently."""
-    imgs = ING.ingest_fused(fixtures.images_df(spark, 120, with_bytes=False))
-    store.write_partitioned(imgs, root, "m0", staged=True)
-    marker = os.path.join(root, "_commits", "m0.json")
-
-    # window A: replay happens BEFORE compaction — manifest-exists branch
-    # must backfill the missing marker (self-heal), not just return
-    os.remove(marker)
-    doc = store.write_partitioned(imgs, root, "m0", staged=True)
-    assert doc["total_rows"] == 120
-    assert os.path.exists(marker), "manifest-exists replay must backfill marker"
-    assert store.read_table(spark, root).count() == 120
-
-    # window B: crash between the writes and NO replay before compaction —
-    # the archived manifest is the only committed-proof left
-    os.remove(marker)
-    store.compact_store(spark, root, "c1")
-    assert not os.path.exists(os.path.join(root, "_manifests",
-                                           "manifest-m0.json"))
-    doc = store.write_partitioned(imgs, root, "m0", staged=True)
-    assert doc["total_rows"] == 120
-    assert store.read_table(spark, root).count() == 120  # not 240
-    assert store.count_from_manifest(root) == 120
-    assert os.path.exists(marker), "archived-manifest replay must backfill marker"
 
 
 def test_quantile_store_replay_after_compaction(spark, tmp_path):
@@ -710,9 +626,3 @@ def test_quantile_store_skips_torn_delta(spark, tmp_path):
             shutil.copy(os.path.join(src, f), os.path.join(torn, f))
     got = {r["q"]: r["est"] for r in SK.read_quantile_store(spark, root).collect()}
     assert got == want, "torn delta must not contribute to the merge"
-    # grace window (round-5 fix) protects a delta a live writer may own;
-    # this test simulates an ABANDONED torn delta, so disable the grace
-    SK.compact_quantile_store(spark, root, torn_grace_s=0)
-    assert not os.path.isdir(torn), "compaction must sweep the torn delta"
-    got = {r["q"]: r["est"] for r in SK.read_quantile_store(spark, root).collect()}
-    assert got == want

@@ -12,8 +12,12 @@ Distribution care (naive replication distorts the dedup family):
   forming 10-cliques of trivial near-dups.
 * embeddings: fresh seeded random unit vectors per (vec_id, rep) — keeps
   LSH bucket load realistic instead of 10 exact copies per vector.
-* events / lineitem / orders: keys shifted per replica (user/order/part
+* events: ``event_id`` and ``user_id`` shifted per replica (user
   cardinality scales with rows).
+* lineitem / orders: only ``l_orderkey`` and ``o_orderkey`` are shifted
+  per replica, so order cardinality scales with rows; ``l_partkey``,
+  ``l_suppkey`` and ``o_custkey`` are not, so part, supplier and customer
+  cardinality stay at the sf0.1 values.
 * dims (nation/region/customer/part/supplier): copied as-is.
 
 Usage: python tools/make_sfx.py [out_dir] [factor]
